@@ -329,7 +329,11 @@ object Bench {
           .flatMap(f => "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(f.getName).map(_.group(1).toInt))
         if (seen.isEmpty) 0 else seen.max + 1
       }
-    val histLine = s"""{"round":$round,"app":"${spark.sparkContext.applicationId}","sf":"$sfDir","unit":"kb_read_write_spill_peak","queries":$mJson}"""
+    // Both ledger lines carry the warm pass's failed builds (bounded, as
+    // on stdout below): a crashed or partial warm pass moves bytes from
+    // "__warm__" into timed keys, and must not read as a byte collapse.
+    val warmFailuresJson = warmFailures.take(20).map("\"" + _ + "\"").mkString("[", ",", "]")
+    val histLine = s"""{"round":$round,"app":"${spark.sparkContext.applicationId}","sf":"$sfDir","unit":"kb_read_write_spill_peak","warm_failures":$warmFailuresJson,"queries":$mJson}"""
     // Companion SECONDS line (r17 VERDICT #2: the driver captures only a
     // ~2 KB stdout tail, so a full per-query map can never ride it — the
     // committed ledger is the only channel that survives; with this line
@@ -342,7 +346,7 @@ object Bench {
     def fmt2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     val secJson = results.sortBy(_._1).map { case (k, v) =>
       "\"" + k.takeWhile(_ != '_') + "\":" + fmt2(v) }.mkString("{", ",", "}")
-    val secLine = s"""{"round":$round,"app":"${spark.sparkContext.applicationId}","sf":"$sfDir","unit":"sec","cpus":$cpus,"warm_sec":${fmt2(warmSec)},"runs":${out.runs},"pass_sums":${out.passSums.map(fmt2).mkString("[", ",", "]")},"pass_ends":${out.passEnds.map(fmt2).mkString("[", ",", "]")},"retimes":${out.retimed.size},"queries_sec":$secJson}"""
+    val secLine = s"""{"round":$round,"app":"${spark.sparkContext.applicationId}","sf":"$sfDir","unit":"sec","cpus":$cpus,"warm_sec":${fmt2(warmSec)},"runs":${out.runs},"pass_sums":${out.passSums.map(fmt2).mkString("[", ",", "]")},"pass_ends":${out.passEnds.map(fmt2).mkString("[", ",", "]")},"retimes":${out.retimed.size},"warm_failures":$warmFailuresJson,"queries_sec":$secJson}"""
     try {
       val dir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_METRICS_DIR", "docs/bench"))
       dir.mkdirs()
@@ -404,7 +408,7 @@ object Bench {
     // a non-empty list names exactly which shared builds may have landed
     // in a timed key this run. Bounded (≤20 names): never grows with
     // query count, so it cannot crowd the total line out.
-    println(s"""{"warm_failures":${warmFailures.take(20).map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
+    println(s"""{"warm_failures":$warmFailuresJson}""")
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n":${results.size},"failed":$failed,"runs":${out.runs},"pass_sums":$sums,"pass_ends":$ends,"retimes":${out.retimed.size},"heap_mb":$heapMb,"shuf_r_mb":$shufR,"shuf_w_mb":$shufW,"spill_mb":$spillT,"peak_mb":$peakT,"families":$fams,"sf":"$sfDir"}""")
     spark.stop()
   }

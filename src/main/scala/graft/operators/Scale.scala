@@ -96,9 +96,9 @@ object Scale {
     * [[zOrderKey]] alternative whose rotations remove Morton's diagonal
     * jumps: every curve step is a unit grid step, so consecutive key
     * ranges are tighter rectangles and sorted-file min/max envelopes
-    * cover less dead area on 2-D box predicates (graft.SkipRate measures
-    * both curves on the same layout; docs/PLANS.md records the skip
-    * rates). A 16-round rotate/reflect state machine can't unroll as a
+    * cover less dead area on 2-D box predicates (docs/PLANS.md, section
+    * "b60/b61 — SCD2 + z-order clustering key", records both curves'
+    * skip rates on the same layout). A 16-round rotate/reflect state machine can't unroll as a
     * column-expression ladder without exponential tree growth, so this
     * is a codegen `Expression`
     * ([[graft.plans.SpatialExpressions.HilbertKey]]); the b92 oracle
@@ -166,7 +166,13 @@ object Scale {
     * values and the broadcast at domain/bucketWidth rows — size it off
     * the value domain (the 2^16 default gives ~160 buckets on the cents
     * fixtures); skewed value ranges skew buckets, same caveat as
-    * [[contiguousIds]]. */
+    * [[contiguousIds]].
+    *
+    * Precondition: `vw` must be deterministic — the same rows on every
+    * evaluation. The kernel reads it twice (the per-value leg and the
+    * bucket-total leg), so a nondeterministic input (rand-based sample,
+    * unordered limit) can give `cum` and `tot` from different rows;
+    * persist or checkpoint such an input first. */
   private[graft] def valueCumSums(vw: DataFrame, bucketWidth: Long): DataFrame = {
     require(bucketWidth >= 1, s"bucketWidth must be positive, got $bucketWidth")
     // the range bucket is an integral division — fail at the API edge

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   * diagonal jumps (every curve step is a unit grid step), so consecutive
   * key ranges are tighter rectangles and file min/max envelopes cover
   * less dead area — measurably better skipping on 2-D box predicates
-  * (graft.SkipRate prints both; docs/PLANS.md holds the numbers).
+  * (docs/PLANS.md, section "b60/b61 — SCD2 + z-order clustering key",
+  * holds both curves' measured skip rates).
   */
 object SpatialExpressions {
 

@@ -2,27 +2,28 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bounded memoizer for persisted per-(session, sfDir) DataFrames (the
-  * materialized-view caches: Tables.orderItems, SparkEntry.docClusters).
+/** Bounded memoizer for per-session values keyed by (session, string):
+  * the shared per-(session, sfDir) intermediates ([[Shared]]) and the
+  * plan-keyed advisor caches (Pipeline.bloomAdvisor, CountMin.joinOrderAdvisor).
   *
   * An unbounded ConcurrentHashMap would pin cached blocks and SparkSession
   * references for the life of the JVM; this LRU evicts beyond `maxEntries`
-  * and unpersists the evicted DataFrame so its storage is released. Sized
-  * for the realistic working set (a handful of (session, scale-factor)
-  * combinations), not as a general cache.
+  * and passes the evicted value to `release` (for frames: unpersist) so its
+  * storage is released. Sized for the realistic working set (a handful of
+  * (session, scale-factor) combinations), not as a general cache.
   */
-private[graft] final class Memo(maxEntries: Int = 8) {
+private[graft] final class Memo[V](maxEntries: Int, release: V => Unit) {
   private type K = (SparkSession, String)
 
-  private val m = new java.util.LinkedHashMap[K, DataFrame](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, DataFrame]): Boolean =
-      if (size() > maxEntries) {
-        try e.getValue.unpersist() catch { case _: Exception => () }
-        true
-      } else false
+  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+      if (size() > maxEntries) { releaseQuietly(e.getValue); true } else false
   }
 
-  def getOrElseUpdate(k: K)(f: => DataFrame): DataFrame = m.synchronized {
+  private def releaseQuietly(v: V): Unit =
+    try release(v) catch { case _: Exception => () }
+
+  def getOrElseUpdate(k: K)(f: => V): V = m.synchronized {
     val v = m.get(k)
     if (v != null) v
     else {
@@ -32,35 +33,21 @@ private[graft] final class Memo(maxEntries: Int = 8) {
     }
   }
 
-  /** Non-building read — present iff cached (touches LRU recency). */
-  def peek(k: K): Option[DataFrame] = m.synchronized(Option(m.get(k)))
-
-  /** Overwriting insert, for callers that must keep SIBLING entries
-    * consistent (the bpe3 merges/corpus pair is rebuilt together from
-    * one chain — r17 ADVICE). The displaced frame is unpersisted like
-    * every other removal path (eviction, clear) so the class invariant
-    * holds for any future caller; on checkpoint-backed frames (the bpe3
-    * pair) Dataset.unpersist is a CacheManager no-op and their blocks
-    * fall to the ContextCleaner once unreferenced. */
-  def put(k: K, v: DataFrame): Unit = m.synchronized {
-    val prev = m.put(k, v)
-    if (prev != null && (prev ne v))
-      try prev.unpersist() catch { case _: Exception => () }
-  }
-
-  /** Explicit invalidation hook: unpersist and drop every cached entry.
+  /** Explicit invalidation hook: release and drop every cached entry.
     * Callers whose underlying data changed in-place (same path, rewritten
     * files — the one case a plan-derived key cannot see) must call this
     * before reusing a memoized builder. */
   def clear(): Unit = m.synchronized {
-    m.values.forEach { df =>
-      try df.unpersist() catch { case _: Exception => () }
-    }
+    m.values.forEach(v => releaseQuietly(v))
     m.clear()
   }
 }
 
 private[graft] object Memo {
+  /** A memo of persisted frames: evicted and cleared entries are unpersisted. */
+  def apply(maxEntries: Int): Memo[DataFrame] =
+    new Memo[DataFrame](maxEntries, _.unpersist())
+
   /** md5 hex of a string — the one shared digest helper for memo keys
     * (one definition, so a keying fix can never apply to half the
     * call sites). */

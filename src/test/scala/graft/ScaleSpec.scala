@@ -416,8 +416,7 @@ class ScaleSpec extends SparkSpec {
     // the same box, same file count. The suite asserts only STRUCTURAL
     // properties (multi-file layout, nonzero skipping): Hilbert usually
     // beats Morton and does on every measured fixture so far
-    // (docs/PLANS.md records the strict wins at sf0.01/sf0.1 via
-    // SkipRate), but the inequality is data-dependent — a fixture
+    // (docs/PLANS.md records the strict wins at sf0.01/sf0.1), but the inequality is data-dependent — a fixture
     // regeneration could legitimately produce a 16-file layout where it
     // ties or loses by one file without any code bug (r9 ADVICE), so
     // the comparison is RECORDED, not hard-asserted.

@@ -74,12 +74,18 @@ def shuffle_drift_section():
     # position, so a round that appends two runs or re-appends a line
     # cannot shift which run counts as "newest".
     series = {}
+    # runs whose untimed warm pass failed (Bench writes "warm_failures" on
+    # both ledger lines of a run): their "__warm__" bytes are short and the
+    # missing builds land in timed keys, so their drift is not a plan change
+    warm_failed = {}
     for line in open(path):
         try:
             e = json.loads(line)
         except ValueError:
             continue
         rnd = e.get("round", -1)
+        if e.get("warm_failures"):
+            warm_failed[(rnd, e.get("app", "?"), e.get("sf", "?"))] = e["warm_failures"]
         for q, v in e.get("queries", {}).items():
             # byte rows are [read, write, spill, peak] lists; ignore any
             # other shape (the r18 "unit":"sec" companion lines keep their
@@ -113,6 +119,12 @@ def shuffle_drift_section():
         "memo-warm run must not become the baseline — r9 VERDICT #3).",
         "",
         f"Flagged: {'; '.join(flagged) if flagged else 'none'}.",
+        "",
+        "Runs whose warm pass failed (bytes of the named shared builds moved",
+        "into timed keys; read their drift flags as warm gaps, not plans): "
+        + ("; ".join(f"r{r} {app}@{sf}: {', '.join(names)}"
+                     for (r, app, sf), names in sorted(warm_failed.items()))
+           if warm_failed else "none") + ".",
     ]
 
 
